@@ -122,6 +122,16 @@ def tokens_col(col: Column | str) -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(_JAVA_TOKEN_RX), 0)
 
 
+def _token_count_col(col: Column | str) -> Column:
+    """``size(tokens_col(col))`` as a long, in one regex pass with no
+    array materialization. It counts over the SAME lowered text:
+    lowering can split a token (U+0130 İ lowers to i + combining dot,
+    a separator), so a count over the raw text would disagree with the
+    postings on such input."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_count(F.lower(c), F.lit(_JAVA_TOKEN_RX)).cast("long")
+
+
 def norm_keyword_col(col: Column | str) -> Column:
     """Native keyword normalizer (ASCII-exact)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -398,8 +398,10 @@ def postings_plan_from_tokens(
       threshold-insensitive (11.9 s vs 12.1 s with 4M-row buffers).
     * ``'stream'``: the folded per-posting Arrow stream into the
       incremental :class:`_StreamEncoder` — zero group buffering at
-      any df; kept as the byte-identity cross-check and the shape the
-      streaming compaction encoder reuses.
+      any df; kept only as the byte-identity reference for
+      ``'packed'``. The streaming compaction does not use it: it
+      re-encodes through :func:`pack_and_encode_folded`, the packed
+      tail.
 
     Beware same-plan re-execution when benchmarking: Spark reuses
     completed shuffle map stages of an identical plan, so only
@@ -656,26 +658,6 @@ def auto_salt_spec(
     return make_salt_spec(min_id, max_id, n_ranges, n_docs, block_size, hot)
 
 
-def postings_plan(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_shards: int,
-    n_docs: int,
-    avgdl: float,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    block_size: int = BLOCK_SIZE,
-    partitions: int | None = None,
-    tokenizer=None,
-    salt: SaltSpec | None = None,
-) -> DataFrame:
-    """postings_plan_from_tokens over a fresh tokenize of ``docs`` —
-    for callers without a reusable tokenized projection."""
-    toks = docs_with_tokens(docs, text_col, id_col, tokenizer)
-    return postings_plan_from_tokens(spark, toks, n_shards, n_docs, avgdl,
-                                     block_size, partitions, salt)
-
-
 def norms_from_tokens(toks: DataFrame, n_shards: int) -> DataFrame:
     return toks.select(
         F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
@@ -698,7 +680,6 @@ def build_index(
     salt_df_threshold: int | None = None,
     salt_sample_frac: float = 0.01,
     auto_salt: bool = True,
-    layout: str = "packed",
 ) -> IndexTables:
     """Build the full index (postings/dictionary/norms/stats) lazily.
 

@@ -547,7 +547,7 @@ def bm25_topk_from_index(
     """
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     agg = bm25_scores_from_index(spark, tables, terms, n_docs, avgdl, dfs=dfs)
     if round_digits is not None:
         agg = agg.withColumn("score", F.round("score", round_digits))
@@ -595,7 +595,7 @@ def bm25_scores_from_index(
         n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
     dfs = _resolve_dfs(tables, terms, dfs)
     if not dfs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     idf_map = {t: float(bm25.idf(df, n_docs)) for t, df in dfs.items()}
 
     blocks = tables.postings.filter(F.col("term").isin(terms))
@@ -667,7 +667,7 @@ def multi_match_topk_df(
     and the SQL oracle round the identical quantity."""
     terms = analyze_query(query)
     if not terms or not fields:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     parts = [
         _bm25_scores_df(docs, terms, id_col, fld, round_digits=None)
         .withColumn("score", F.col("score") * F.lit(float(boost)))
@@ -724,7 +724,7 @@ def multi_match_from_index(
     both ``most_fields`` and ``best_fields``."""
     terms = analyze_query(query)
     if not terms or not field_tables:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     parts = [
         bm25_scores_from_index(spark, tables, terms)
         .withColumn("score", F.col("score") * F.lit(float(boost)))
@@ -931,7 +931,7 @@ def cross_fields_topk_df(
 
     terms = analyze_query(query)
     if not terms or not fields:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     tok = tokenizer or tokens_col
     flds = list(fields.items())
     srow = docs.agg(
@@ -1060,9 +1060,9 @@ def cross_fields_from_index(
     per-field posting decode tagged with term → norms join for dl →
     blended-idf scoring → the shared term-level dis_max tail.
     Rank-identical to :func:`cross_fields_topk_df` (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms or not field_tables:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     flds = list(field_tables.items())
     stats0 = flds[0][1][0].stats.collect()[0]
     n_docs = int(stats0["n_docs"])
@@ -1073,7 +1073,7 @@ def cross_fields_from_index(
             if d > blend.get(t, 0):
                 blend[t] = d
     if not blend:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     idf_items = []
     for t, d in blend.items():
         idf_items.extend([F.lit(t), F.lit(float(bm25.idf(d, n_docs)))])
@@ -1145,7 +1145,7 @@ def cross_fields_serve(
 
     from deces_dataprep_spark.index.wand import decode_term_arrays
 
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms or not field_engines:
         return []
     if any(eng.n_docs > QueryEngine.DISTRIBUTED_CORPUS_THRESHOLD
@@ -1322,13 +1322,13 @@ def bm25_topk_broadcast(
 
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     if n_docs is None or avgdl is None:
         stats = tables.stats.collect()[0]
         n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
     dfs = _resolve_dfs(tables, terms, dfs)
     if not dfs:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
 
     rows = (
         tables.postings.filter(F.col("term").isin(terms))
@@ -1423,7 +1423,7 @@ def bm25_topk_df(
     """
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     agg = _bm25_scores_df(docs, terms, id_col, text_col, round_digits,
                           tokenizer)
     return agg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -1524,7 +1524,7 @@ def bm25_search_after_df(
     scan-and-discard), which is why ES mandates it beyond 10k hits."""
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     agg = _bm25_scores_df(docs, terms, id_col, text_col, round_digits)
     if after_score is not None:
         agg = agg.filter(search_after_filter(after_score, int(after_doc_id)))
@@ -1557,32 +1557,9 @@ def rescore_topk_df(
     difference, deterministic either way here). Scores are rounded
     before both ranking cuts so window membership and the final order
     are engine-stable (the repo-wide oracle convention)."""
-    base_terms = analyze_query(query)
-    if not base_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, base_terms, id_col, text_col,
-                           round_digits=round_digits)
-    window = base.orderBy(F.desc("score"), F.asc("doc_id")) \
-        .limit(window_size)
-    re_terms = analyze_query(rescore_query)
-    if re_terms:
-        sec = _bm25_scores_df(docs, re_terms, id_col, text_col,
-                              round_digits=round_digits) \
-            .withColumnRenamed("score", "sec_score")
-        window = window.join(sec, "doc_id", "left")
-    else:
-        window = window.withColumn("sec_score", F.lit(None).cast("double"))
-    combined = (
-        F.lit(float(query_weight)) * F.col("score")
-        + F.lit(float(rescore_query_weight))
-        * F.coalesce(F.col("sec_score"), F.lit(0.0))
-    )
-    return (
-        window.select(
-            "doc_id", F.round(combined, round_digits).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _rescore(spark, _scan_scores(docs, id_col, text_col), query,
+                    rescore_query, k, window_size, query_weight,
+                    rescore_query_weight, round_digits)
 
 
 def rescore_topk_from_index(
@@ -1600,27 +1577,27 @@ def rescore_topk_from_index(
     distributed top-k plan (posting pushdown), secondary scores from
     the rescore terms' postings only, combined on the ≤window_size
     rows. Rank-identical to :func:`rescore_topk_df` (tested)."""
-    window = bm25_topk_from_index(spark, tables, query, k=window_size,
-                                  round_digits=round_digits)
-    re_terms = list(dict.fromkeys(analyze_query(rescore_query)))
+    return _rescore(spark, _index_scores(spark, tables), query,
+                    rescore_query, k, window_size, query_weight,
+                    rescore_query_weight, round_digits)
+
+
+def _rescore(spark, scores, query, rescore_query, k, window_size,
+             query_weight, rescore_query_weight, round_digits):
+    terms = analyze_query(query)
+    if not terms:
+        return _no_hits(spark)
+    window = _rounded(scores(terms), round_digits) \
+        .orderBy(F.desc("score"), F.asc("doc_id")).limit(window_size)
+    re_terms = analyze_query(rescore_query)
+    sec, sec_score = None, F.lit(0.0)
     if re_terms:
-        sec = bm25_scores_from_index(spark, tables, re_terms) \
-            .select("doc_id", F.round("score", round_digits)
-                    .alias("sec_score"))
-        window = window.join(sec, "doc_id", "left")
-    else:
-        window = window.withColumn("sec_score", F.lit(None).cast("double"))
-    combined = (
-        F.lit(float(query_weight)) * F.col("score")
-        + F.lit(float(rescore_query_weight))
-        * F.coalesce(F.col("sec_score"), F.lit(0.0))
-    )
-    return (
-        window.select(
-            "doc_id", F.round(combined, round_digits).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+        sec = _rounded(scores(re_terms), round_digits) \
+            .withColumnRenamed("score", "sec_score")
+        sec_score = F.coalesce(F.col("sec_score"), F.lit(0.0))
+    combined = (F.lit(float(query_weight)) * F.col("score")
+                + F.lit(float(rescore_query_weight)) * sec_score)
+    return _combine_topk(window, sec, combined, k, round_digits)
 
 
 def duckdb_rescore_sql(
@@ -1723,14 +1700,9 @@ def function_score_topk_df(
     runs over the index route (:func:`function_score_from_index`,
     rank-identical, tested). One final rounding, (score desc, doc_id
     asc) top-k — the repo-wide serving contract."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=None)
-    fvals = docs.select(F.col(id_col).alias("doc_id"), F.col(field))
-    return _function_score_tail(base, fvals, field, factor, modifier,
-                                missing, boost_mode, k, round_digits)
+    return _function_score(spark, _scan_scores(docs, id_col, text_col),
+                           docs, query, field, factor, modifier, missing,
+                           boost_mode, k, id_col, round_digits)
 
 
 def function_score_from_index(
@@ -1753,31 +1725,24 @@ def function_score_from_index(
     docs projection — ES keeps the same field in doc values; a columnar
     store IS Spark's parquet column. Rank-identical to the scan plan
     (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = bm25_scores_from_index(spark, tables, terms)
-    fvals = docs.select(F.col(id_col).alias("doc_id"), F.col(field))
-    return _function_score_tail(base, fvals, field, factor, modifier,
-                                missing, boost_mode, k, round_digits)
+    return _function_score(spark, _index_scores(spark, tables), docs,
+                           query, field, factor, modifier, missing,
+                           boost_mode, k, id_col, round_digits)
 
 
-def _function_score_tail(base: DataFrame, fvals: DataFrame, field: str,
-                         factor: float, modifier: str, missing: float,
-                         boost_mode: str, k: int,
-                         round_digits: int) -> DataFrame:
+def _function_score(spark, scores, docs, query, field, factor, modifier,
+                    missing, boost_mode, k, id_col, round_digits):
     if boost_mode not in ("multiply", "sum"):
         raise ValueError(f"unknown boost_mode: {boost_mode!r}")
     fn = _fvf_col(F.col(field), factor, modifier, missing)
-    joined = base.join(fvals, "doc_id", "left")
+    terms = analyze_query(query)
+    if not terms:
+        return _no_hits(spark)
     combined = (F.col("score") * fn if boost_mode == "multiply"
                 else F.col("score") + fn)
-    return (
-        joined.select(
-            "doc_id", F.round(combined, round_digits).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _combine_topk(scores(terms),
+                         _doc_values(docs, id_col, F.col(field)),
+                         combined, k, round_digits)
 
 
 def duckdb_function_score_sql(
@@ -1841,7 +1806,6 @@ def facet_stats_df(
     ``array_contains`` conjunction (no explode, prunes in the scan
     stage) → ONE map-side-combinable global aggregate — a single row
     reaches the driver at any corpus size."""
-    terms = analyze_query(query)
     c = F.col(num_col).cast("double")
     agg_exprs = [
         F.count(F.lit(1)).alias("n_docs"),
@@ -1850,16 +1814,8 @@ def facet_stats_df(
         F.sum(c).alias("sum_v"),
         F.avg(c).alias("avg_v"),
     ]
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    out = base.agg(*agg_exprs)
+    out = _matched_docs_df(docs, analyze_query(query), text_col) \
+        .agg(*agg_exprs)
     if round_digits is not None:
         for col in ("min_v", "max_v", "sum_v", "avg_v"):
             out = out.withColumn(col, F.round(col, round_digits))
@@ -1881,19 +1837,8 @@ def facet_counts_df(
     conjunctive ``array_contains`` filter (no explode — the filter is a
     per-row expression, so the scan stage prunes before any shuffle) →
     groupBy(facet) with map-side partial agg → TakeOrderedAndProject."""
-    terms = analyze_query(query)
-    if not terms:
-        # derive the schema from docs so the facet column's type matches
-        # the non-empty branch (a hardcoded string would diverge for
-        # numeric facet columns)
-        return docs.limit(0).groupBy(F.col(facet_col).alias(facet_col)).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
     return (
-        docs.filter(cond)
+        _matched_docs_df(docs, analyze_query(query), text_col)
         .groupBy(F.col(facet_col).alias(facet_col))
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy(F.desc("n_docs"), F.asc(facet_col))
@@ -1921,24 +1866,19 @@ def percentiles_df(
     Plan mirrors :func:`facet_stats_df`: per-row ``array_contains``
     conjunction, no explode, ONE global aggregate row that is then
     unpacked driver-cheap (len(percents) rows total)."""
-    terms = analyze_query(query)
+    return _percentiles(_matched_docs_df(docs, analyze_query(query),
+                                         text_col),
+                        num_col, percents, round_digits)
+
+
+def _percentiles(matched: DataFrame, num_col: str, percents,
+                 round_digits: int | None) -> DataFrame:
     pcts = [float(p) for p in percents]
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    vals = base.agg(
+    vals = matched.agg(
         F.percentile(F.col(num_col).cast("double"),
                      F.array(*[F.lit(p / 100.0) for p in pcts]))
         .alias("vals"))
-    out = vals.select(
-        F.posexplode("vals").alias("i", "value"),
-    ).select(
+    out = vals.select(F.posexplode("vals").alias("i", "value")).select(
         F.element_at(F.array(*[F.lit(p) for p in pcts]),
                      F.col("i") + 1).alias("percent"),
         "value",
@@ -1997,25 +1937,9 @@ def top_hits_df(
     group key, never corpus-wide, and each partition's window is
     bounded by its match count. Scores rounded BEFORE ranking (the
     repo-wide contract, so the oracle ranks the identical quantity)."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame(
-            [], f"group string, rank int, doc_id long, score double")
-    from pyspark.sql import Window
-
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=round_digits)
-    groups = docs.select(F.col(id_col).alias("doc_id"),
-                         F.col(group_col).cast("string").alias("group"))
-    w = Window.partitionBy("group").orderBy(F.desc("score"),
-                                            F.asc("doc_id"))
-    return (
-        base.join(groups, "doc_id")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= hits_per_bucket)
-        .select("group", "rank", "doc_id", "score")
-        .orderBy("group", "rank")
-    )
+    return _top_hits(spark, _scan_scores(docs, id_col, text_col), docs,
+                     query, group_col, hits_per_bucket, id_col,
+                     round_digits)
 
 
 def duckdb_top_hits_sql(
@@ -2079,22 +2003,9 @@ def date_histogram_df(
     :func:`facet_counts_df`: per-row conjunction filter (prunes in the
     scan stage, no explode) → ONE map-side-combinable groupBy — bucket
     cardinality, not corpus size, reaches the driver."""
-    terms = analyze_query(query)
-    bucket = F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
-        .cast("date").alias("bucket")
-    if not terms:
-        return docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(
+        _matched_docs_df(docs, analyze_query(query), text_col),
+        _date_bucket(date_col, interval))
 
 
 def date_histogram_from_index(
@@ -2111,16 +2022,26 @@ def date_histogram_from_index(
     ``doc_id``) → one bucket aggregate. Bucket-identical to
     :func:`date_histogram_df` (tested); corpus cost is the matched
     postings + a metadata semi-join, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    bucket = F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
+    return _bucket_counts(
+        _matched_docs_from_index(tables, meta_docs, analyze_query(query)),
+        _date_bucket(date_col, interval))
+
+
+def _date_bucket(date_col: str, interval: str) -> "F.Column":
+    return F.date_trunc(interval, F.col(date_col).cast("timestamp")) \
         .cast("date").alias("bucket")
-    if not terms:
-        return meta_docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
+
+
+def _num_bucket(num_col: str, interval: int) -> "F.Column":
+    return (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
+            * interval).cast("long").alias("bucket")
+
+
+def _bucket_counts(matched: DataFrame, bucket: "F.Column") -> DataFrame:
+    """One ``(bucket, n_docs)`` row per non-empty bucket in bucket order
+    (ES default ``min_doc_count=1``): ONE map-side-combinable groupBy."""
     return (
-        meta_docs.join(matching, "doc_id", "left_semi")
-        .groupBy(bucket)
+        matched.groupBy(bucket)
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .orderBy("bucket")
     )
@@ -2143,22 +2064,9 @@ def histogram_df(
     :func:`date_histogram_df`: per-row conjunction filter → ONE
     map-side-combinable groupBy — bucket cardinality, not corpus size,
     reaches the driver."""
-    terms = analyze_query(query)
-    bucket = (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
-              * interval).cast("long").alias("bucket")
-    if not terms:
-        return docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(
+        _matched_docs_df(docs, analyze_query(query), text_col),
+        _num_bucket(num_col, interval))
 
 
 def cardinality_df(
@@ -2178,19 +2086,16 @@ def cardinality_df(
     ``exact=False`` is Spark's own HLL++ ``approx_count_distinct``
     (shuffle-free partial aggregation, the 100-TB shape, but
     engine-specific counts so no DuckDB oracle)."""
-    terms = analyze_query(query)
+    return _cardinality(
+        _matched_docs_df(docs, analyze_query(query), text_col),
+        card_col, exact)
+
+
+def _cardinality(matched: DataFrame, card_col: str,
+                 exact: bool) -> DataFrame:
     agg = (F.count_distinct(F.col(card_col)) if exact
            else F.approx_count_distinct(F.col(card_col)))
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    return base.agg(agg.alias("cardinality"))
+    return matched.agg(agg.alias("cardinality"))
 
 
 def histogram_from_index(
@@ -2205,19 +2110,9 @@ def histogram_from_index(
     match set → metadata semi-join → the same bucket aggregate.
     Bucket-identical to the scan route (tested); corpus cost is the
     matched postings, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    bucket = (F.floor(F.col(num_col).cast("double") / F.lit(float(interval)))
-              * interval).cast("long").alias("bucket")
-    if not terms:
-        return meta_docs.limit(0).groupBy(bucket).agg(
-            F.count(F.lit(1)).alias("n_docs"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    return (
-        meta_docs.join(matching, "doc_id", "left_semi")
-        .groupBy(bucket)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .orderBy("bucket")
-    )
+    return _bucket_counts(
+        _matched_docs_from_index(tables, meta_docs, analyze_query(query)),
+        _num_bucket(num_col, interval))
 
 
 def cardinality_from_index(
@@ -2230,14 +2125,9 @@ def cardinality_from_index(
 ) -> DataFrame:
     """:func:`cardinality_df` served FROM THE INDEX (same match-set
     semi-join shape; value-identical to the scan route, tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    agg = (F.count_distinct(F.col(card_col)) if exact
-           else F.approx_count_distinct(F.col(card_col)))
-    if not terms:
-        return meta_docs.limit(0).agg(agg.alias("cardinality"))
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    return meta_docs.join(matching, "doc_id", "left_semi").agg(
-        agg.alias("cardinality"))
+    return _cardinality(
+        _matched_docs_from_index(tables, meta_docs, analyze_query(query)),
+        card_col, exact)
 
 
 def percentiles_from_index(
@@ -2254,25 +2144,9 @@ def percentiles_from_index(
     ``percentile`` aggregate (value-identical to the scan route,
     tested). Corpus cost is the matched postings plus one narrow
     metadata column, never a full-text scan."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    pcts = [float(p) for p in percents]
-    if not terms:
-        base = meta_docs.limit(0)
-    else:
-        matching = _matching_doc_ids_from_postings(tables, terms)
-        base = meta_docs.join(matching, "doc_id", "left_semi")
-    vals = base.agg(
-        F.percentile(F.col(num_col).cast("double"),
-                     F.array(*[F.lit(p / 100.0) for p in pcts]))
-        .alias("vals"))
-    out = vals.select(F.posexplode("vals").alias("i", "value")).select(
-        F.element_at(F.array(*[F.lit(p) for p in pcts]),
-                     F.col("i") + 1).alias("percent"),
-        "value",
-    )
-    if round_digits is not None:
-        out = out.withColumn("value", F.round("value", round_digits))
-    return out.orderBy("percent")
+    return _percentiles(
+        _matched_docs_from_index(tables, meta_docs, analyze_query(query)),
+        num_col, percents, round_digits)
 
 
 def top_hits_from_index(
@@ -2290,20 +2164,25 @@ def top_hits_from_index(
     the group projection joins on doc_id and the same group-key
     window cuts each bucket. Rank-identical to the scan route
     (tested) — scores round BEFORE ranking, the repo-wide contract."""
+    return _top_hits(spark, _index_scores(spark, tables), meta_docs,
+                     query, group_col, hits_per_bucket, "doc_id",
+                     round_digits)
+
+
+def _top_hits(spark, scores, docs, query, group_col, hits_per_bucket,
+              id_col, round_digits):
     terms = analyze_query(query)
     if not terms:
         return spark.createDataFrame(
             [], "group string, rank int, doc_id long, score double")
     from pyspark.sql import Window
 
-    base = bm25_scores_from_index(spark, tables, terms).withColumn(
-        "score", F.round("score", round_digits))
-    groups = meta_docs.select(
-        "doc_id", F.col(group_col).cast("string").alias("group"))
+    groups = _doc_values(docs, id_col,
+                         F.col(group_col).cast("string").alias("group"))
     w = Window.partitionBy("group").orderBy(F.desc("score"),
                                             F.asc("doc_id"))
     return (
-        base.join(groups, "doc_id")
+        _rounded(scores(terms), round_digits).join(groups, "doc_id")
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= hits_per_bucket)
         .select("group", "rank", "doc_id", "score")
@@ -2336,9 +2215,7 @@ def significant_terms_df(
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, jlh double")
     toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
+    cond = _all_terms_col(toks, terms)
     base = docs.select(F.array_distinct(toks).alias("__t"),
                        cond.alias("__fg"))
     ex = base.select(F.explode("__t").alias("term"),
@@ -2380,7 +2257,7 @@ def significant_terms_from_index(
     foreground docs — by construction a small slice — are re-analyzed
     for their distinct terms. Row-identical to
     :func:`significant_terms_df` (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return spark.createDataFrame(
             [], "term string, fg_df long, bg_df long, jlh double")
@@ -2451,6 +2328,107 @@ def _matching_doc_ids_from_postings(tables: "IndexTables",
     return _matching_doc_ids_decode(tables, terms).groupBy("doc_id").agg(
         F.count_distinct("term").alias("__n")
     ).filter(F.col("__n") == len(terms)).select("doc_id")
+
+
+# ---------------------------------------------------------------------------
+# the two shared primitives under every scan/index twin: the filter-context
+# matched-doc frame and the base BM25 score set, plus the one combine tail
+# ---------------------------------------------------------------------------
+
+
+def _all_terms_col(toks: "F.Column", terms: list[str]) -> "F.Column":
+    """True where the token array holds EVERY term — the filter-context
+    match as a per-row ``array_contains`` conjunction (prunes in the
+    scan stage, no explode, no shuffle)."""
+    cond = F.lit(True)
+    for t in terms:
+        cond = cond & F.array_contains(toks, t)
+    return cond
+
+
+def _matched_docs_df(docs: DataFrame, terms: list[str],
+                     text_col: str) -> DataFrame:
+    """Filter-context doc set over raw docs: the rows holding ALL
+    ``terms`` (none for an empty query)."""
+    if not terms:
+        return docs.limit(0)
+    return docs.filter(_all_terms_col(tokens_col(text_col), terms))
+
+
+def _matched_docs_from_index(tables: "IndexTables", meta_docs: DataFrame,
+                             terms: list[str],
+                             id_col: str = "doc_id") -> DataFrame:
+    """:func:`_matched_docs_df` served from the index: the doc-metadata
+    rows left-semi-joined to the all-terms posting set — the matched
+    postings plus a metadata semi-join, never a full-text scan."""
+    if not terms:
+        return meta_docs.limit(0)
+    matching = _matching_doc_ids_from_postings(tables, terms)
+    if id_col == "doc_id":
+        return meta_docs.join(matching, "doc_id", "left_semi")
+    return meta_docs.join(matching, meta_docs[id_col] == matching["doc_id"],
+                          "left_semi")
+
+
+def _scan_scores(docs: DataFrame, id_col: str, text_col: str):
+    """Base score set of the scan route: ``terms → unrounded (doc_id,
+    score)`` over the raw docs."""
+    return lambda terms: _bm25_scores_df(docs, terms, id_col, text_col,
+                                         round_digits=None)
+
+
+def _index_scores(spark: SparkSession, tables: IndexTables):
+    """Base score set of the index route (posting pushdown)."""
+    return lambda terms: bm25_scores_from_index(spark, tables, terms)
+
+
+def _no_hits(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "doc_id long, score double")
+
+
+def _doc_values(docs: DataFrame, id_col: str, *cols) -> DataFrame:
+    """A narrow per-doc projection keyed ``doc_id`` (ES doc values: a
+    columnar store IS Spark's parquet column)."""
+    return docs.select(F.col(id_col).alias("doc_id"), *cols)
+
+
+def _rounded(scores: DataFrame, round_digits: int | None) -> DataFrame:
+    if round_digits is None:
+        return scores
+    return scores.withColumn("score", F.round("score", round_digits))
+
+
+def _combine_topk(base: DataFrame, factor: DataFrame | None,
+                  score: "F.Column", k: int,
+                  round_digits: int | None) -> DataFrame:
+    """The shared re-ranking tail: base ``(doc_id, score)`` LEFT JOIN a
+    per-doc factor frame on doc_id → ``score`` (an expression over both)
+    rounded once → (score desc, doc_id asc) top-k — the repo-wide
+    serving contract. Docs without a factor row keep their base score
+    through the left join."""
+    if factor is not None:
+        base = base.join(factor, "doc_id", "left")
+    if round_digits is not None:
+        score = F.round(score, round_digits)
+    return (
+        base.select("doc_id", score.alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
+    )
+
+
+def _cell_counts(base: DataFrame, cells: list) -> DataFrame:
+    """``(key, n_docs)`` rows for possibly overlapping ``(key, cond)``
+    cells: ONE map-side-combinable aggregate with a conditional count
+    per cell (a single reduce row), unpivoted in declared order — every
+    cell is emitted, empty ones too."""
+    row = base.agg(*[
+        F.sum(F.when(c, 1).otherwise(0)).cast("long").alias(f"__c{i}")
+        for i, (_, c) in enumerate(cells)])
+    structs = [F.struct(F.lit(key).alias("key"),
+                        F.col(f"__c{i}").alias("n_docs"))
+               for i, (key, _) in enumerate(cells)]
+    return row.select(F.explode(F.array(*structs)).alias("b")).select("b.*")
 
 
 def suggest_terms(
@@ -2601,7 +2579,7 @@ def explain_score_df(
     query's terms); the target doc's tf rows come from ONE pushed-down
     ``id_col = doc_id`` filter. Output is |terms| rows — driver-safe at
     any corpus size."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return spark.createDataFrame(
             [], "term string, tf long, df long, dl long, idf double,"
@@ -2648,7 +2626,7 @@ def explain_score_serve(
 
     from deces_dataprep_spark.index.wand import decode_term_arrays
 
-    terms = list(dict.fromkeys(analyze_query(query)))
+    terms = analyze_query(query)
     if not terms:
         return []
     by_shard = engine._fetch_term_postings(terms)
@@ -2688,8 +2666,7 @@ def duckdb_explain_score_sql(
     """Oracle twin of :func:`explain_score_df`."""
     from deces_dataprep_spark.functions.analyze import duckdb_tokens_sql
 
-    terms = ", ".join(f"'{t}'" for t in
-                      dict.fromkeys(analyze_query(query))) or "NULL"
+    terms = ", ".join(f"'{t}'" for t in analyze_query(query)) or "NULL"
     toks = duckdb_tokens_sql(text_col)
     score = bm25.duckdb_bm25_sql(
         "tf", "df", "dl", "(select n_docs from stats)",
@@ -2752,7 +2729,7 @@ def boolean_topk_df(
     not_t = [t for q in (must_not or []) for t in analyze_query(q)]
     scored_terms = list(dict.fromkeys(must_t + should_t))
     if not scored_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
 
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -2838,7 +2815,7 @@ def boolean_topk_from_index(
     scored_terms = list(dict.fromkeys(must_t + should_t))
     all_terms = list(dict.fromkeys(scored_terms + not_t))
     if not scored_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
 
     stats = tables.stats.collect()[0]
     n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
@@ -2848,7 +2825,7 @@ def boolean_topk_from_index(
             F.col("term").isin(all_terms)).collect()
     }
     if any(t not in dfs for t in set(must_t)):
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
 
     blocks = tables.postings.filter(F.col("term").isin(all_terms))
 
@@ -3086,7 +3063,7 @@ def mlt_topk_df(
     )
     terms = [r["term"] for r in sel.collect()]
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     tf_sel = tf_all.filter(F.col("term").isin(terms))
     scored = tf_sel.join(
         F.broadcast(df_map.filter(F.col("term").isin(terms))), "term"
@@ -3138,7 +3115,7 @@ def mlt_topk_from_index(
 
     toks = list(tokenize_series(pd.Series([source_text])).iloc[0])
     if not toks:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     if n_docs is None or avgdl is None:
         stats = tables.stats.collect()[0]
         n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
@@ -3161,7 +3138,7 @@ def mlt_topk_from_index(
     cands.sort()
     terms = [t for _, t in cands[:max_terms]]
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     agg = bm25_scores_from_index(spark, tables, terms, n_docs, avgdl)
     if round_digits is not None:
         agg = agg.withColumn("score", F.round("score", round_digits))
@@ -3249,7 +3226,7 @@ def duckdb_boolean_topk_sql(
     not_t = [t for q in (must_not or []) for t in analyze_query(q)]
     scored_terms = list(dict.fromkeys(must_t + should_t))
     terms_sql = ", ".join(f"'{t}'" for t in scored_terms)
-    must_sql = ", ".join(f"'{t}'" for t in set(must_t)) or "NULL"
+    must_sql = ", ".join(f"'{t}'" for t in sorted(set(must_t))) or "NULL"
     score = bm25.duckdb_bm25_sql(
         "tf", "df", "dl",
         "(select n_docs from stats)", "(select avgdl from stats)",
@@ -3280,7 +3257,7 @@ GROUP BY doc_id
 HAVING count(DISTINCT CASE WHEN term IN ({must_sql}) THEN term END)
        = {len(set(must_t))}
 AND count(DISTINCT CASE WHEN term IN
-          ({", ".join(f"'{t}'" for t in set(should_t)) or "NULL"})
+          ({", ".join(f"'{t}'" for t in sorted(set(should_t))) or "NULL"})
           THEN term END) >= {int(minimum_should_match)}
 {not_clause}
 {f"AND doc_id IN (SELECT doc_id FROM {table} WHERE {filter_where})"
@@ -3363,32 +3340,17 @@ def boosting_topk_df(
     any-term predicate. No broadcast hint: the negative set is
     corpus-proportional in the worst case (a stopword negative), so the
     join strategy is left to AQE."""
-    pos_t = analyze_query(positive)
-    neg_t = analyze_query(negative)
-    if not pos_t:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scores = _bm25_scores_df(docs, pos_t, id_col, text_col,
-                             round_digits=None)
-    if neg_t:
+    def negatives(neg_t):
         toks = tokens_col(text_col)
         cond = F.lit(False)
         for t in neg_t:
             cond = cond | F.array_contains(toks, t)
-        neg = docs.filter(cond).select(
+        return docs.filter(cond).select(
             F.col(id_col).alias("doc_id"), F.lit(True).alias("_neg"))
-        scores = (
-            scores.join(neg, "doc_id", "left")
-            .withColumn(
-                "score",
-                F.when(F.col("_neg"),
-                       F.col("score") * F.lit(float(negative_boost)))
-                .otherwise(F.col("score")))
-            .drop("_neg")
-        )
-    if round_digits is not None:
-        scores = scores.withColumn("score",
-                                   F.round("score", round_digits))
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    return _boosting(spark, _scan_scores(docs, id_col, text_col),
+                     negatives, positive, negative, negative_boost, k,
+                     round_digits)
 
 
 def boosting_topk_from_index(
@@ -3405,27 +3367,28 @@ def boosting_topk_from_index(
     left join against the union of the negative terms' posting doc
     sets (df-bounded, decoded executor-side — no full-text scan
     anywhere). Rank-identical to the scan route (tested)."""
-    pos_t = list(dict.fromkeys(analyze_query(positive)))
-    neg_t = list(dict.fromkeys(analyze_query(negative)))
-    if not pos_t:
-        return spark.createDataFrame([], "doc_id long, score double")
-    scores = bm25_scores_from_index(spark, tables, pos_t)
-    if neg_t:
-        neg = _matching_doc_ids_decode(tables, neg_t).select(
+    def negatives(neg_t):
+        return _matching_doc_ids_decode(tables, neg_t).select(
             "doc_id").distinct().withColumn("_neg", F.lit(True))
-        scores = (
-            scores.join(neg, "doc_id", "left")
-            .withColumn(
-                "score",
-                F.when(F.col("_neg"),
-                       F.col("score") * F.lit(float(negative_boost)))
-                .otherwise(F.col("score")))
-            .drop("_neg")
-        )
-    if round_digits is not None:
-        scores = scores.withColumn("score",
-                                   F.round("score", round_digits))
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+
+    return _boosting(spark, _index_scores(spark, tables), negatives,
+                     positive, negative, negative_boost, k, round_digits)
+
+
+def _boosting(spark, scores, negatives, positive, negative,
+              negative_boost, k, round_digits):
+    """``negatives(terms)`` is the route's ANY-term doc set as
+    ``(doc_id, _neg)`` rows."""
+    pos_t = analyze_query(positive)
+    neg_t = analyze_query(negative)
+    if not pos_t:
+        return _no_hits(spark)
+    neg, score = None, F.col("score")
+    if neg_t:
+        neg = negatives(neg_t)
+        score = F.when(F.col("_neg"), score * F.lit(float(negative_boost))) \
+            .otherwise(score)
+    return _combine_topk(scores(pos_t), neg, score, k, round_digits)
 
 
 def duckdb_boosting_sql(
@@ -3490,20 +3453,11 @@ def constant_score_df(
     project + ``TakeOrderedAndProject`` on the deterministic doc_id
     tie-break (ES leaves equal-score order to shard internals; doc_id
     asc makes it reproducible cross-engine)."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    toks = tokens_col(text_col)
-    cond = F.lit(True)
-    for t in terms:
-        cond = cond & F.array_contains(toks, t)
-    return (
-        docs.filter(cond)
-        .select(F.col(id_col).alias("doc_id"),
-                F.lit(float(boost)).alias("score"))
-        .orderBy(F.asc("doc_id"))
-        .limit(k)
-    )
+    def matched_ids(terms):
+        return _matched_docs_df(docs, terms, text_col).select(
+            F.col(id_col).alias("doc_id"))
+
+    return _constant_score(spark, matched_ids, query, boost, k)
 
 
 def constant_score_from_index(
@@ -3517,11 +3471,18 @@ def constant_score_from_index(
     filter-context ALL-terms doc set straight from the terms' posting
     blocks — no text scan, no scoring decode (tf bytes never leave the
     codec). Result-identical to the scan route (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
+    def matched_ids(terms):
+        return _matching_doc_ids_from_postings(tables, terms)
+
+    return _constant_score(spark, matched_ids, query, boost, k)
+
+
+def _constant_score(spark, matched_ids, query, boost, k):
+    terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     return (
-        _matching_doc_ids_from_postings(tables, terms)
+        matched_ids(terms)
         .select("doc_id", F.lit(float(boost)).alias("score"))
         .orderBy(F.asc("doc_id"))
         .limit(k)
@@ -3568,36 +3529,19 @@ def range_agg_df(
     unpivoted to ``(key, n_docs)`` rows in the declared bucket order.
     ``None`` bounds are open ends; keys follow ES's ``from-to`` form
     with ``*`` for open ends."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
     val = F.col(num_col).cast("double")
-    aggs, buckets = [], []
-    for i, (lo, hi) in enumerate(ranges):
+    cells = []
+    for lo, hi in ranges:
         cond = F.lit(True)
         if lo is not None:
             cond = cond & (val >= float(lo))
         if hi is not None:
             cond = cond & (val < float(hi))
-        aggs.append(
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-            .alias(f"__c{i}"))
         key = (f"{'*' if lo is None else float(lo)}"
                f"-{'*' if hi is None else float(hi)}")
-        buckets.append((i, key))
-    row = base.agg(*aggs)
-    structs = [F.struct(F.lit(key).alias("key"),
-                        F.col(f"__c{i}").alias("n_docs"))
-               for i, key in buckets]
-    return row.select(
-        F.explode(F.array(*structs)).alias("b")).select("b.*")
+        cells.append((key, cond))
+    return _cell_counts(
+        _matched_docs_df(docs, analyze_query(query), text_col), cells)
 
 
 def duckdb_range_agg_sql(
@@ -3648,33 +3592,21 @@ def filters_agg_df(
     outer query. Buckets may overlap and every named bucket is always
     emitted — same single-reduce-row conditional-count shape as
     :func:`range_agg_df`, unpivoted to ``(key, n_docs)``."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
+    return _cell_counts(
+        _matched_docs_df(docs, analyze_query(query), text_col),
+        list(_sub_filter_cols(named_terms, text_col).items()))
+
+
+def _sub_filter_cols(named_terms: dict[str, str],
+                     text_col: str) -> dict[str, "F.Column"]:
+    """One all-terms match Column per named sub-query (a sub-query that
+    analyzes to nothing matches nothing)."""
     toks = tokens_col(text_col)
-    aggs, names = [], []
-    for i, (name, sub) in enumerate(named_terms.items()):
+    out = {}
+    for name, sub in named_terms.items():
         sub_t = analyze_query(sub)
-        cond = F.lit(bool(sub_t))
-        for t in sub_t:
-            cond = cond & F.array_contains(toks, t)
-        aggs.append(
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-            .alias(f"__c{i}"))
-        names.append((i, name))
-    row = base.agg(*aggs)
-    structs = [F.struct(F.lit(name).alias("key"),
-                        F.col(f"__c{i}").alias("n_docs"))
-               for i, name in names]
-    return row.select(
-        F.explode(F.array(*structs)).alias("b")).select("b.*")
+        out[name] = _all_terms_col(toks, sub_t) if sub_t else F.lit(False)
+    return out
 
 
 def duckdb_filters_agg_sql(
@@ -3728,33 +3660,8 @@ def composite_agg_df(
     (same shape as search_after) → orderBy(key asc) + limit(size) —
     Catalyst turns the tail into TakeOrderedAndProject, so only
     ``size`` buckets ever reach the driver."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    agg = base.groupBy(*[F.col(s) for s in sources]).agg(
-        F.count(F.lit(1)).alias("n_docs"))
-    if after is not None:
-        if len(after) != len(sources):
-            raise ValueError(
-                f"after cursor has {len(after)} values for "
-                f"{len(sources)} sources")
-        # lexicographic strictly-after: (k1 > a1) OR (k1 = a1 AND
-        # (k2 > a2)) OR ...
-        cursor = F.lit(False)
-        for i in range(len(sources) - 1, -1, -1):
-            tie = F.col(sources[i]) > F.lit(after[i])
-            for j in range(i):
-                tie = (F.col(sources[j]) == F.lit(after[j])) & tie
-            cursor = cursor | tie
-        agg = agg.filter(cursor)
-    return agg.orderBy(*[F.asc(s) for s in sources]).limit(size)
+    return _composite(_matched_docs_df(docs, analyze_query(query), text_col),
+                      sources, size, after)
 
 
 def composite_agg_from_index(
@@ -3769,15 +3676,22 @@ def composite_agg_from_index(
     """:func:`composite_agg_df` served FROM THE INDEX: posting-pushdown
     match set → metadata semi-join → the same paged bucket plan.
     Bucket-identical to the scan route (tested)."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    if not terms:
-        return composite_agg_df(spark, meta_docs.limit(0), "", sources,
-                                size, after)
-    matching = _matching_doc_ids_from_postings(tables, terms)
-    matched = meta_docs.join(matching, "doc_id", "left_semi")
+    return _composite(
+        _matched_docs_from_index(tables, meta_docs, analyze_query(query)),
+        sources, size, after)
+
+
+def _composite(matched: DataFrame, sources: list[str], size: int,
+               after: tuple | None) -> DataFrame:
     agg = matched.groupBy(*[F.col(s) for s in sources]).agg(
         F.count(F.lit(1)).alias("n_docs"))
     if after is not None:
+        if len(after) != len(sources):
+            raise ValueError(
+                f"after cursor has {len(after)} values for "
+                f"{len(sources)} sources")
+        # lexicographic strictly-after: (k1 > a1) OR (k1 = a1 AND
+        # (k2 > a2)) OR ...
         cursor = F.lit(False)
         for i in range(len(sources) - 1, -1, -1):
             tie = F.col(sources[i]) > F.lit(after[i])
@@ -3846,20 +3760,6 @@ def _rank_feature_col(f: "F.Column", function: str, pivot: float,
                   F.lit(float(boost)) * c).otherwise(F.lit(0.0))
 
 
-def _feature_score_tail(base: DataFrame, fvals: DataFrame,
-                        contrib: "F.Column", k: int,
-                        round_digits: int) -> DataFrame:
-    joined = base.join(fvals, "doc_id", "left")
-    return (
-        joined.select(
-            "doc_id",
-            F.round(F.col("score") + contrib, round_digits)
-            .alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
 def rank_feature_topk_df(
     spark: SparkSession,
     docs: DataFrame,
@@ -3882,16 +3782,9 @@ def rank_feature_topk_df(
     corpus statistic — non-deterministic across refreshes; we keep the
     contract reproducible). Same narrow-projection join plan as
     function_score."""
-    terms = analyze_query(query)
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=None)
-    fvals = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(feature_col))
-    contrib = _rank_feature_col(F.col(feature_col), function, pivot,
-                                boost, exp, scaling)
-    return _feature_score_tail(base, fvals, contrib, k, round_digits)
+    return _rank_feature(spark, _scan_scores(docs, id_col, text_col), docs,
+                         query, feature_col, function, pivot, boost, exp,
+                         scaling, k, id_col, round_digits)
 
 
 def rank_feature_from_index(
@@ -3912,15 +3805,21 @@ def rank_feature_from_index(
     """:func:`rank_feature_topk_df` with the base score set from the
     terms' posting blocks (rank-identical to the scan route, tested);
     the feature column is a two-column doc-values projection."""
-    terms = list(dict.fromkeys(analyze_query(query)))
-    if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = bm25_scores_from_index(spark, tables, terms)
-    fvals = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(feature_col))
+    return _rank_feature(spark, _index_scores(spark, tables), docs, query,
+                         feature_col, function, pivot, boost, exp,
+                         scaling, k, id_col, round_digits)
+
+
+def _rank_feature(spark, scores, docs, query, feature_col, function,
+                  pivot, boost, exp, scaling, k, id_col, round_digits):
     contrib = _rank_feature_col(F.col(feature_col), function, pivot,
                                 boost, exp, scaling)
-    return _feature_score_tail(base, fvals, contrib, k, round_digits)
+    terms = analyze_query(query)
+    if not terms:
+        return _no_hits(spark)
+    return _combine_topk(scores(terms),
+                         _doc_values(docs, id_col, F.col(feature_col)),
+                         F.col("score") + contrib, k, round_digits)
 
 
 def duckdb_rank_feature_sql(
@@ -3999,17 +3898,16 @@ def distance_feature_topk_df(
     narrow-projection join plan as rank_feature."""
     terms = analyze_query(query)
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    base = _bm25_scores_df(docs, terms, id_col, text_col,
-                           round_digits=None)
-    fvals = docs.select(F.col(id_col).alias("doc_id"), F.col(field))
+        return _no_hits(spark)
     fv = F.col(field).cast("double")
     contrib = F.when(
         fv.isNotNull(),
         F.lit(float(boost)) * F.lit(float(pivot))
         / (F.lit(float(pivot)) + F.abs(fv - F.lit(float(origin)))),
     ).otherwise(F.lit(0.0))
-    return _feature_score_tail(base, fvals, contrib, k, round_digits)
+    return _combine_topk(_scan_scores(docs, id_col, text_col)(terms),
+                         _doc_values(docs, id_col, F.col(field)),
+                         F.col("score") + contrib, k, round_digits)
 
 
 def duckdb_distance_feature_sql(
@@ -4079,7 +3977,7 @@ def terms_set_topk_df(
     terms = [t for q in terms for t in analyze_query(q)]
     terms = list(dict.fromkeys(terms))
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return _no_hits(spark)
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         tokens_col(text_col).alias("tokens"),
@@ -4179,8 +4077,7 @@ def pinned_query_df(
     terms = analyze_query(organic_query)
     organic = (_bm25_scores_df(docs, terms, id_col, text_col,
                                round_digits)
-               if terms else
-               spark.createDataFrame([], "doc_id long, score double"))
+               if terms else _no_hits(spark))
     if pinned_ids:
         organic = organic.filter(
             ~F.col("doc_id").isin([int(i) for i in pinned_ids]))
@@ -4238,19 +4135,9 @@ def missing_agg_df(
     matching the query have NO indexed value for ``field`` — NULL and
     '' both count as missing, mirroring :func:`es_fields.exists_filter`
     (ES's exists/missing duality). One conditional-count reduce row."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
     fc = F.col(field)
     is_missing = fc.isNull() | (fc.cast("string") == F.lit(""))
-    return base.agg(
+    return _matched_docs_df(docs, analyze_query(query), text_col).agg(
         F.sum(F.when(is_missing, 1).otherwise(0)).cast("long")
         .alias("n_docs"))
 
@@ -4418,42 +4305,15 @@ def adjacency_matrix_df(
     :func:`filters_agg_df` (N + N·(N−1)/2 counts in ONE combinable
     aggregate); ES emits only non-empty buckets here (unlike
     ``filters``), so the unpivot filters n_docs > 0."""
-    terms = analyze_query(query)
-    base = docs
-    if terms:
-        toks = tokens_col(text_col)
-        cond = F.lit(True)
-        for t in terms:
-            cond = cond & F.array_contains(toks, t)
-        base = docs.filter(cond)
-    else:
-        base = docs.limit(0)
-    toks = tokens_col(text_col)
-    names = list(named_terms)
-    conds = {}
-    for name in names:
-        sub_t = analyze_query(named_terms[name])
-        c = F.lit(bool(sub_t))
-        for t in sub_t:
-            c = c & F.array_contains(toks, t)
-        conds[name] = c
-    cells = [(n, conds[n]) for n in names]
+    conds = _sub_filter_cols(named_terms, text_col)
+    names = list(conds)
+    cells = list(conds.items())
     for i, a in enumerate(names):
         for b in names[i + 1:]:
             cells.append((f"{a}{separator}{b}", conds[a] & conds[b]))
-    aggs = [
-        F.sum(F.when(c, 1).otherwise(0)).cast("long").alias(f"__c{i}")
-        for i, (_, c) in enumerate(cells)
-    ]
-    row = base.agg(*aggs)
-    structs = [F.struct(F.lit(key).alias("key"),
-                        F.col(f"__c{i}").alias("n_docs"))
-               for i, (key, _) in enumerate(cells)]
-    return (
-        row.select(F.explode(F.array(*structs)).alias("b"))
-        .select("b.*")
-        .filter(F.col("n_docs") > 0)
-    )
+    return _cell_counts(
+        _matched_docs_df(docs, analyze_query(query), text_col), cells
+    ).filter(F.col("n_docs") > 0)
 
 
 def duckdb_adjacency_matrix_sql(

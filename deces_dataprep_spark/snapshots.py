@@ -399,7 +399,6 @@ def write_index(
     salt_df_threshold: int | None = None,
     with_positions: bool = False,
     auto_salt: bool = True,
-    layout: str = "packed",
 ) -> BuildResult:
     """Build + persist the index with shard-level checkpointing.
 
@@ -528,7 +527,7 @@ def write_index(
                 F.pmod(F.col("doc_id"), F.lit(n_shards)).isin(batch)
             )
             part = postings_plan_from_tokens(spark, toks_b, n_shards, n_docs_g,
-                                             avgdl_g, salt=salt, layout=layout)
+                                             avgdl_g, salt=salt)
             # The encode runs wide (3× slots — see postings_plan_from_tokens)
             # but a partitionBy write from P wide tasks lands P×shards tiny
             # files, which every downstream scan (lineage agg, dictionary,

@@ -10,15 +10,15 @@ equivalent:
 * ``incremental_index`` — ``writeStream.foreachBatch``: every
   micro-batch appends (a) its norms rows and (b) a posting-block
   *delta* under ``postings_delta/ingest_batch=<id>/``, built by the
-  same ``postings_plan`` dataflow as the batch builder. Deltas are
+  same ``postings_plan_from_tokens`` dataflow as the batch builder. Deltas are
   encoded with the *batch-local* avgdl, so their ``block_max_tfnorm``
   is not a trusted global bound — queries over an uncompacted index
   must use the exact TAAT path (``method='taat'``), never WAND.
 * ``compact_deltas`` — the sort-merge of partial postings: decode base
   + deltas back to (shard, term, doc_id, tf), join the accumulated
-  norms for dl, re-encode through ``postings_plan``'s encoder with the
-  *final* global stats, and atomically commit the merged index as a
-  new snapshot. After compaction WAND bounds are valid again.
+  norms for dl, re-encode through the batch builder's block packer
+  (``pack_and_encode_folded``) with the *final* global stats, and
+  atomically commit the merged index as a new snapshot. After compaction WAND bounds are valid again.
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation
   over an event stream (late data handled by the watermark), the
   streaming counterpart of the ``events_hourly`` batch rollup.
@@ -79,9 +79,9 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     nothing), so no emptiness pre-check job is needed.
 
     No shared persisted projection (round 6): the norms side only needs
-    doc_len == the TOKEN COUNT, which ``regexp_count`` computes in one
+    doc_len == the TOKEN COUNT, which ``_token_count_col`` computes in one
     regex pass with no array materialization (identical longs to
-    ``size(tokens_col(text))`` — null/empty parity pinned by
+    ``size(tokens_col(text))`` — null/empty/non-ASCII parity pinned by
     ``test_streaming``'s dl-parity test), so the norms job is a tiny
     array-free projection write and the delta job tokenizes its own
     repartitioned input. The former shared cache made the two jobs
@@ -101,7 +101,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
     after this change."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from deces_dataprep_spark.functions.analyze import _JAVA_TOKEN_RX
+    from deces_dataprep_spark.functions.analyze import _token_count_col
     from deces_dataprep_spark.index.builder import postings_plan_from_tokens
 
     par = spark.sparkContext.defaultParallelism
@@ -111,8 +111,7 @@ def _append_batch(spark: SparkSession, batch_df: DataFrame, batch_id: int,
             F.pmod(F.col("doc_id"), F.lit(n_shards)).cast("int")
             .alias("shard"),
             "doc_id",
-            F.regexp_count(F.col("text"), F.lit(_JAVA_TOKEN_RX))
-            .cast("long").alias("doc_len"),
+            _token_count_col("text").alias("doc_len"),
             F.lit(batch_id).alias("ingest_batch"),
         )
         (norms.write.mode("overwrite")

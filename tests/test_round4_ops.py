@@ -102,6 +102,9 @@ def test_date_histogram_index_route_identical(spark, documents):
         spark, tables, docs.select("doc_id", "crawl_date"),
         "table row", "crawl_date", "month").collect()]
     assert scan == idx
+    assert date_histogram_df(spark, docs, "", "crawl_date").collect() \
+        == date_histogram_from_index(spark, tables, docs, "",
+                                     "crawl_date").collect() == []
 
 
 def test_minimum_should_match_matches_duckdb(spark, sf_dir, documents):

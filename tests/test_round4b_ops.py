@@ -219,6 +219,10 @@ def test_rescore_routes_rank_identical(spark, documents):
                                   rescore_query_weight=2.0).collect()
     assert [(r["doc_id"], r["score"]) for r in scan] == \
         [(r["doc_id"], r["score"]) for r in idx] and scan
+    # the empty query is the other branch both routes share
+    assert rescore_topk_df(spark, documents, "", "hash join").collect() \
+        == rescore_topk_from_index(spark, tables, "", "hash join").collect() \
+        == []
 
 
 def test_rescore_only_reorders_within_window(spark, documents):
@@ -257,3 +261,11 @@ def test_histogram_and_cardinality_index_routes(spark, documents):
     c_idx = cardinality_from_index(spark, tables, documents, "merge",
                                    "source").collect()[0]["cardinality"]
     assert c_scan == c_idx > 0
+    # empty query: both routes answer over the empty match set
+    assert histogram_df(spark, documents, "", "n_chars", 64).collect() \
+        == histogram_from_index(spark, tables, documents, "", "n_chars",
+                                64).collect() == []
+    assert [tuple(r) for r in cardinality_df(
+        spark, documents, "", "source").collect()] == [tuple(r) for r in
+        cardinality_from_index(spark, tables, documents, "",
+                               "source").collect()] == [(0,)]

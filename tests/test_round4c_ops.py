@@ -177,6 +177,9 @@ def test_function_score_index_route_rank_identical(spark, documents):
     for (_, a), (_, b) in zip(idx, scan):
         assert a == pytest.approx(b, abs=2e-6)
     assert scan
+    assert function_score_topk_df(spark, documents, "", "n_chars") \
+        .collect() == function_score_from_index(
+            spark, t, documents, "", "n_chars").collect() == []
 
 
 # ---------------------------------------------------------------------------
@@ -290,6 +293,16 @@ def test_percentiles_and_top_hits_index_routes(spark, documents):
     for a, b in zip(idx_th, scan_th):
         assert a[3] == pytest.approx(b[3], abs=2e-6)
     assert scan_th
+
+    # empty query: no match set on either route
+    assert [tuple(r) for r in percentiles_df(
+        spark, documents, "", "n_chars").collect()] == [
+        tuple(r) for r in percentiles_from_index(
+            spark, t, documents.select("doc_id", "n_chars"), "",
+            "n_chars").collect()]
+    assert top_hits_df(spark, documents, "", "lang").collect() \
+        == top_hits_from_index(spark, t, documents, "", "lang") \
+        .collect() == []
 
 
 def test_top_hits_per_bucket_cut(spark):

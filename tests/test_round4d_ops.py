@@ -68,6 +68,9 @@ def test_boosting_index_route_identical(spark, documents):
                                    k=10).collect()
     assert [(r["doc_id"], r["score"]) for r in scan] == [
         (r["doc_id"], pytest.approx(r["score"], abs=1e-6)) for r in idx]
+    assert boosting_topk_df(spark, documents, "", "dup").collect() \
+        == boosting_topk_from_index(spark, tables, "", "dup").collect() \
+        == []
 
 
 def test_boosting_no_negative_equals_plain_match(spark, documents):
@@ -99,6 +102,8 @@ def test_constant_score_index_route_identical(spark, documents):
     idx = constant_score_from_index(spark, tables, "table row",
                                     boost=2.0, k=25).collect()
     assert [tuple(r) for r in scan] == [tuple(r) for r in idx]
+    assert constant_score_df(spark, documents, "").collect() \
+        == constant_score_from_index(spark, tables, "").collect() == []
 
 
 # ---------------------------------------------------------------------------
@@ -208,6 +213,31 @@ def test_composite_agg_index_route_identical(spark, documents):
                                    "table row", ["lang", "source"],
                                    size=8, after=("de", "src5")).collect()
     assert [tuple(r) for r in scan] == [tuple(r) for r in idx]
+    assert composite_agg_df(spark, documents, "", ["lang"]).collect() \
+        == composite_agg_from_index(spark, tables, documents, "",
+                                    ["lang"]).collect() == []
+
+
+@pytest.mark.parametrize("after", [("de",), ("de", "src5", "x")])
+def test_composite_agg_rejects_mismatched_cursor_on_both_routes(
+        spark, documents, after):
+    """A cursor must carry one value per source on either route — a
+    short one would index past its end, a long one silently truncate."""
+    from deces_dataprep_spark.index.query import (
+        composite_agg_df,
+        composite_agg_from_index,
+    )
+
+    tables = build_index(spark, documents, n_shards=2)
+    for run in (
+        lambda: composite_agg_df(spark, documents, "table row",
+                                 ["lang", "source"], after=after),
+        lambda: composite_agg_from_index(spark, tables, documents,
+                                         "table row", ["lang", "source"],
+                                         after=after),
+    ):
+        with pytest.raises(ValueError, match="after cursor has"):
+            run()
 
 
 # ---------------------------------------------------------------------------

@@ -71,6 +71,10 @@ def test_rank_feature_index_route_identical(spark, documents):
                                   k=10).collect()
     assert [(r["doc_id"], r["score"]) for r in scan] == [
         (r["doc_id"], pytest.approx(r["score"], abs=1e-6)) for r in idx]
+    assert rank_feature_topk_df(spark, documents, "", "n_chars",
+                                pivot=300.0).collect() \
+        == rank_feature_from_index(spark, tables, documents, "",
+                                   "n_chars", pivot=300.0).collect() == []
 
 
 def test_rank_feature_missing_feature_contributes_zero(spark, documents):

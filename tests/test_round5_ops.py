@@ -85,6 +85,19 @@ def test_nested_agg_index_route_identical(spark, dated_docs):
     import pandas as pd
 
     pd.testing.assert_frame_equal(scan, idx, check_dtype=False)
+    assert aggs.nested_agg_df(spark, dated_docs, "", buckets,
+                              metrics).collect() \
+        == aggs.nested_agg_from_index(spark, tables, dated_docs, "",
+                                      buckets, metrics).collect() == []
+
+
+def test_nested_agg_rejects_empty_bucket_path_on_both_routes(spark,
+                                                            documents):
+    count = [aggs.metric("count")]
+    with pytest.raises(ValueError, match="at least one bucket"):
+        aggs.nested_agg_df(spark, documents, "table row", [], count)
+    with pytest.raises(ValueError, match="at least one bucket"):
+        aggs.nested_agg_from_index(spark, None, documents, "", [], count)
 
 
 def test_nested_agg_single_groupby_plan(spark, dated_docs):

@@ -71,7 +71,11 @@ def test_suggest_phrase_jobs_independent_of_slots(spark, tables):
     sc = spark.sparkContext
 
     def jobs():
-        return len(sc._jsc.sc().statusTracker().getJobIdsForGroup(None))
+        # job ids are sequential; the status store evicts 100 old jobs
+        # at a time past spark.ui.retainedJobs (1000), so count by the
+        # newest id — len() drops by 100 mid-session
+        ids = sc._jsc.sc().statusTracker().getJobIdsForGroup(None)
+        return max(ids, default=-1) + 1
 
     suggest_phrase(spark, tables, "tabel", k=3).collect()  # warm
     b = jobs()

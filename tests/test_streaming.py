@@ -64,21 +64,21 @@ def test_streamed_norms_dl_matches_tokenizer(spark, streamed_wh, pages_dir):
 
 
 def test_regexp_count_dl_parity_edge_cases(spark):
-    """null / empty / whitespace / accent-free parity of the two dl
-    expressions the streaming path relies on being identical."""
+    """null / empty / whitespace / accent-free / case-splitting parity
+    of the two dl expressions the streaming path relies on being
+    identical."""
     from deces_dataprep_spark.functions.analyze import (
-        _JAVA_TOKEN_RX,
+        _token_count_col,
         tokens_col,
     )
 
     df = spark.createDataFrame(
         [(1, "a b  c"), (2, ""), (3, None), (4, "   "), (5, "x"),
-         (6, "w00123-w4!"), (7, "a" * 500)],
+         (6, "w00123-w4!"), (7, "a" * 500), (8, "İstanbul İİ x")],
         "doc_id long, text string")
     rows = df.select(
         F.size(tokens_col("text")).cast("long").alias("a"),
-        F.regexp_count(F.col("text"), F.lit(_JAVA_TOKEN_RX))
-        .cast("long").alias("b"),
+        _token_count_col("text").alias("b"),
     ).collect()
     for r in rows:
         assert r["a"] == r["b"]
